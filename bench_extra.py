@@ -96,7 +96,11 @@ def docs_df(spark):
 
 
 def t_grouped_conv(spark, plans=False):
-    from probably_jl_spark.operators.grouped import grouped_sketch
+    from probably_jl_spark.operators.grouped import (
+        _dispatch_sample,
+        _exchange_partitions,
+        grouped_sketch,
+    )
     from probably_jl_spark.operators.specs import SketchSpec
 
     from probably_jl_spark.operators.build import plan_columns
@@ -111,6 +115,15 @@ def t_grouped_conv(spark, plans=False):
         noop(shuffled)
     with timed("grouped_conv.exchange_transfer_probe", spark):
         _transfer_probe(shuffled).count()
+    with timed("grouped_conv.dispatch_sample", spark):
+        n, keys, hot, fullest = _dispatch_sample(
+            prepared, ["conv_id"], _exchange_partitions(spark)
+        )
+    print(
+        f"    sample_rows={n} distinct_keys={keys} hot_share={hot:.6f} "
+        f"fullest_share={fullest:.6f}",
+        file=sys.stderr,
+    )
     out = grouped_sketch(tr, ["conv_id"], specs)
     if plans:
         write_plan(out, "grouped_hll_by_conv_after.txt")

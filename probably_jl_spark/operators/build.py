@@ -208,13 +208,18 @@ def tree_merge(partials: DataFrame, specs: list[SketchSpec], depth: int | None =
     deterministic for the merge-order-sensitive kinds (t-digest/KLL/MG),
     exactly like the grouped route's ordered merges. Order-insensitive
     kinds (HLL/CMS/Bloom/KMV) are byte-identical either way
-    (test_distributed_equals_local)."""
+    (test_distributed_equals_local). Partials without rows (an empty
+    input) merge to empty sketches and ``__n_rows`` 0."""
     state_cols = [s.state_col for s in specs]
     sel = partials.select(*state_cols, "n_rows")
     rdd = sel.rdd
     nparts = max(1, rdd.getNumPartitions())
 
     def merge_rows(a, b):
+        # None is the fold's identity: partials with no rows at all (an
+        # empty input) fold to None on both paths below
+        if a is None or b is None:
+            return b if a is None else a
         merged = [merge_blobs(x, y) for x, y in zip(a[:-1], b[:-1])]
         return (*merged, a[-1] + b[-1])
 
@@ -223,27 +228,24 @@ def tree_merge(partials: DataFrame, specs: list[SketchSpec], depth: int | None =
         and nparts <= _DRIVER_MERGE_MAX_PARTIALS
         and nparts * _est_partial_bytes(specs) <= _DRIVER_MERGE_MAX_BYTES
     ):
-        rows = [tuple(r) for r in sel.collect()]
-        if not rows:
-            row = tuple([None] * len(state_cols) + [0])
-        else:
-            row = rows[0]
-            for nxt in rows[1:]:
-                row = merge_rows(row, nxt)
-        out = {s.name: sketch_from_bytes(row[i]) for i, s in enumerate(specs)}
-        out["__n_rows"] = row[-1]
-        return out
-
-    # NB: do NOT coalesce() here — a non-shuffle coalesce propagates into
-    # the mapInPandas stage and would serialize the build itself; the tree
-    # adds only ~sqrt(nparts) reduce tasks on top of the scan tasks.
-    if depth is None:
-        # each extra level is one more scheduling wave (~0.5s fixed): depth
-        # 2 handles thousands of ≤MB state rows; go deeper only at real
-        # cluster fan-in (100k+ partials)
-        depth = 2 if nparts <= 2048 else max(3, int(math.ceil(math.log(nparts, 32))))
-
-    row = rdd.map(tuple).treeReduce(merge_rows, depth=depth)
+        row = None
+        for r in sel.collect():
+            row = merge_rows(row, tuple(r))
+    else:
+        # NB: do NOT coalesce() here — a non-shuffle coalesce propagates
+        # into the mapInPandas stage and would serialize the build itself;
+        # the tree adds only ~sqrt(nparts) reduce tasks on top of the scan
+        # tasks.
+        if depth is None:
+            # each extra level is one more scheduling wave (~0.5s fixed):
+            # depth 2 handles thousands of ≤MB state rows; go deeper only
+            # at real cluster fan-in (100k+ partials)
+            depth = 2 if nparts <= 2048 else max(3, int(math.ceil(math.log(nparts, 32))))
+        # treeReduce's own shape (it is treeAggregate with an identity
+        # sentinel), minus its "empty RDD" error
+        row = rdd.map(tuple).treeAggregate(None, merge_rows, merge_rows, depth=depth)
+    if row is None:
+        return {**{s.name: s.new() for s in specs}, "__n_rows": 0}
     out = {s.name: sketch_from_bytes(row[i]) for i, s in enumerate(specs)}
     out["__n_rows"] = row[-1]
     return out

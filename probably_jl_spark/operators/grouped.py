@@ -1,38 +1,55 @@
-"""Grouped sketches built as streaming partition-local partials
-(north_rule skew handling).
+"""Grouped sketches: one sketch state per group key, built without ever
+materializing a group's rows.
 
-Per-group sketches (e.g. distinct conv_ids per tool, turn-length digest
-per role) never materialize a group's rows. Stage 1 is a ``mapInPandas``
-pass identical in shape to the global build (build.py): each input
-partition keeps a ``{group-key -> sketch}`` dict, updates it per Arrow
-batch with vectorized kernels, and emits one small *state* row per
-(partition, key). Stage 2 shuffles only those serialized states (KBs per
-group) and merges them per key — correct because every sketch merge is
-commutative + associative (SURVEY.md §4.2).
+Two route families:
 
-Why this shape at 100 TB (VERDICT r01 "What's wrong #2"): the previous
-``groupBy(key).applyInPandas`` loaded an entire group into one pandas
-frame — a billion-row hot key was a straight executor OOM. Here a hot key
-costs one sketch per partition, and rows never shuffle at all.
+* Generic (any spec mix): a ``mapInPandas`` pass keeps a partition-local
+  ``{group-key -> sketch}`` dict, updates it per Arrow batch with
+  vectorized kernels, and emits one small *state* row per (partition,
+  key). Only those serialized states shuffle (KBs per group), and a
+  per-key merge folds them — correct because every sketch merge is
+  commutative + associative (SURVEY.md §4.2).
+* Vectorized (all-HLL or all-KMV spec lists): ``direct`` shuffles the raw
+  (key, hash) projection once and builds FINAL states in one
+  post-shuffle pass; ``pre_partial`` builds map-side partial states and
+  merges them partition-wide after one state shuffle. ``grouped_sketch``
+  takes ``pre_partial`` when a bounded key sample shows repeated keys or
+  a skewed exchange, and ``direct`` otherwise.
+
+Why not ``groupBy(key).applyInPandas`` over rows (VERDICT r01 "What's
+wrong #2"): it loads an entire group into one pandas frame — a
+billion-row hot key is a straight executor OOM. Here every builder folds
+rows into compact per-group accumulators.
 
 Skew/fan-in controls:
 
+* Exchange skew (vectorized kinds): the direct exchange sends every row
+  of a key to one task, so a hot key — or several keys hashed into one
+  task — would straggle one core. The dispatch sample
+  (``_dispatch_sample``) reads each sampled row's task id in that
+  exchange; when the fullest task holds over twice its mean share, the
+  build takes ``pre_partial`` instead, where a hot key costs one partial
+  state per scan partition.
 * ``max_states_per_partition`` bounds stage-1 memory on high-cardinality
   keys (per-user sketches): when the dict exceeds the cap, partials are
   flushed mid-partition and rebuilt — merges make that lossless.
-* ``salt_buckets=S > 1`` bounds stage-2 fan-in on huge clusters: states
-  first merge on ``(key, partition_id mod S)``, then the S survivors merge
-  per key — two state shuffles, never row shuffles. (Row-level salting is
-  obsolete in this design; ``salt_cols`` is accepted for API compatibility
-  and ignored.)
+* ``salt_buckets=S > 1`` bounds the generic route's stage-2 fan-in on
+  huge clusters: states first merge on ``(key, partition_id mod S)``,
+  then the S survivors merge per key — two state shuffles, never row
+  shuffles. The vectorized merge has no per-key fan-in, so it takes no
+  salt; ``salt_cols`` is accepted for API compatibility and ignored.
 
-Merges apply in ascending partition-id order, so grouped states are
-deterministic across identical runs even for merge-order-sensitive kinds
-(t-digest/KLL) — the checkpoint resume law (plans/checkpoint.py) depends
-on this.
+Generic-route merges apply in ascending partition-id order, so its
+states are deterministic across identical runs even for
+merge-order-sensitive kinds (t-digest/KLL) — the checkpoint resume law
+(plans/checkpoint.py) depends on this.
 """
 
 from __future__ import annotations
+
+import logging
+import math
+import time
 
 import numpy as np
 import pandas as pd
@@ -42,6 +59,8 @@ from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from .build import batch_arrays, plan_columns
 from .specs import SketchSpec, merge_blobs
+
+_log = logging.getLogger("probably_jl_spark.grouped")
 
 _SALT_COL = "__salt"
 _ORD_COL = "__ord"  # min partition id feeding a state row: merge sort key
@@ -560,6 +579,7 @@ def _vec_direct_builder(specs: list[SketchSpec], group_cols: list[str], col_map:
 
 # pa.BinaryArray offsets are int32: cap the state bytes per emitted batch
 _EMIT_BYTES = 1 << 29
+_OFFSET_LIMIT = 1 << 31  # a chunk's state bytes must stay below this
 
 
 def _vec_direct_builder_arrow(
@@ -696,6 +716,13 @@ def _vec_direct_builder_arrow(
             names.append(_NROWS_COL)
             for s in specs:
                 buf, offs = bufs[s.name]
+                # a single blob over _EMIT_BYTES still makes a one-row
+                # chunk: fail loudly rather than wrap the int32 offsets
+                if offs[stop] - offs[start] >= _OFFSET_LIMIT:
+                    raise OverflowError(
+                        f"{s.state_col}: {int(offs[stop] - offs[start])} state bytes in "
+                        f"one emit chunk exceed the BinaryArray int32 offset range"
+                    )
                 rel = (offs[start : stop + 1] - offs[start]).astype(np.int32)
                 chunk = buf[offs[start] : offs[stop]]
                 arrays.append(
@@ -712,23 +739,118 @@ def _vec_direct_builder_arrow(
     return fn
 
 
-def _preagg_dedup_ratio(prepared: DataFrame, group_cols: list[str], sample_rows: int) -> float:
-    """Distinct-group fraction of a bounded row sample — the decision
-    input for the vectorized route: map-side partials shrink the state
-    exchange by roughly this factor's inverse, so a ratio near 1 means
-    pre-aggregation only adds work. ``limit`` reads just enough leading
-    partitions to fill the sample (one tiny job, no full scan), which is
-    exactly the within-partition locality the partial builder would see."""
-    row = (
-        prepared.select(*group_cols)
-        .limit(sample_rows)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(*[F.col(c) for c in group_cols]).alias("d"),
+_SAMPLE_ROWS = 1 << 16  # dispatch sample: one Arrow batch of keys
+# pre_partial when the sample holds at least this many rows per distinct
+# key: map-side partials then fold most rows before the exchange
+_REPEAT_ROWS = 256
+_SKEW_LOAD = 2.0  # skew guard: the fullest exchange task vs its mean load
+_SKEW_ALPHA = 1e-3  # chance that uniform hashing alone trips the guard
+
+
+def _exchange_partitions(spark) -> int:
+    """Partition count of ``repartition(*cols)`` — Spark's
+    ``SQLConf.numShufflePartitions``: AQE's initial partition number when
+    one is set, else ``spark.sql.shuffle.partitions``."""
+    conf = spark.conf
+    if (
+        conf.get("spark.sql.adaptive.enabled") == "true"
+        and conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
+    ):
+        initial = conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum", None)
+        if initial:
+            return int(initial)
+    return int(conf.get("spark.sql.shuffle.partitions"))
+
+
+def _dispatch_sample(
+    prepared: DataFrame, group_cols: list[str], nparts: int
+) -> tuple[int, int, float, float]:
+    """(sampled rows, distinct keys, hottest key's share, fullest exchange
+    task's share) over the scan's leading rows — the inputs of the
+    vectorized route's dispatch. Per row the driver receives the key's
+    ``xxhash64`` (a multi-column key counts as a tuple) and the key's
+    partition id in the direct exchange, ``pmod(hash(keys), P)`` — the
+    expression ``repartition(*group_cols)`` partitions by, so the task
+    loads include keys that collide in one task. One ``limit`` job; no
+    aggregate stage."""
+    import pyarrow.compute as pc
+
+    sample = (
+        prepared.select(
+            F.xxhash64(*group_cols).alias("k"),
+            F.pmod(F.hash(*group_cols), F.lit(nparts)).alias("p"),
         )
-        .collect()[0]
+        .limit(_SAMPLE_ROWS)
+        .toArrow()
     )
-    return row["d"] / max(row["n"], 1)
+    n = sample.num_rows
+    if not n:
+        return 0, 0, 0.0, 0.0
+    keys = pc.value_counts(sample.column("k")).field("counts")
+    tasks = pc.value_counts(sample.column("p")).field("counts")
+    return n, len(keys), pc.max(keys).as_py() / n, pc.max(tasks).as_py() / n
+
+
+def _load_limit(n: int, nparts: int) -> int:
+    """Most of n sampled rows the fullest of ``nparts`` exchange tasks may
+    get before the skew guard fires: ``_SKEW_LOAD`` times the mean, raised
+    to the count that uniform hashing of n independent rows tops in some
+    task with chance below ``_SKEW_ALPHA``. At large P the mean is a few
+    rows, and chance alone reaches twice that."""
+    lam = n / nparts
+    limit = int(_SKEW_LOAD * lam)
+    while True:
+        # P[Poisson(lam) > limit] <= 2 * pmf(limit + 1): past 2*lam the
+        # terms shrink by lam / (j + 1) < 1/2 per step
+        log_pmf = -lam + (limit + 1) * math.log(lam) - math.lgamma(limit + 2)
+        if nparts * 2 * math.exp(log_pmf) <= _SKEW_ALPHA:
+            return limit
+        limit += 1
+
+
+def _choose_pre_partial(
+    prepared: DataFrame, group_cols: list[str], pre_partial: bool | None
+) -> bool:
+    """The vectorized route's stage-1 shape: a pinned ``pre_partial`` as
+    given, else ``pre_partial`` when the dispatch sample shows either
+    repeated keys (at least ``_REPEAT_ROWS`` rows per distinct key) or an
+    overloaded direct exchange (the fullest task over ``_load_limit``),
+    and ``direct`` otherwise. Logs one decision event; its fields ride on
+    the record as ``record.grouped_route``."""
+    event = {
+        "pinned": pre_partial is not None,
+        "sample_rows": 0,
+        "distinct_keys": None,
+        "hot_share": None,
+        "fullest_share": None,
+        "shuffle_partitions": None,
+        "sample_s": 0.0,
+    }
+    if pre_partial is None:
+        t0 = time.perf_counter()
+        nparts = _exchange_partitions(prepared.sparkSession)
+        n, keys, hot, fullest = _dispatch_sample(prepared, group_cols, nparts)
+        pre_partial = n > 0 and (
+            n >= _REPEAT_ROWS * keys or round(fullest * n) > _load_limit(n, nparts)
+        )
+        event.update(
+            sample_rows=n,
+            distinct_keys=keys,
+            hot_share=hot,
+            fullest_share=fullest,
+            shuffle_partitions=nparts,
+            sample_s=time.perf_counter() - t0,
+        )
+    event["route"] = "pre_partial" if pre_partial else "direct"
+    _log.info(
+        "grouped_sketch route=%(route)s pinned=%(pinned)s sample_rows=%(sample_rows)d "
+        "distinct_keys=%(distinct_keys)s hot_share=%(hot_share)s "
+        "fullest_share=%(fullest_share)s shuffle_partitions=%(shuffle_partitions)s "
+        "sample_s=%(sample_s).3f",
+        event,
+        extra={"grouped_route": event},
+    )
+    return pre_partial
 
 
 def _merge_groups(specs: list[SketchSpec], group_cols: list[str], with_ord: bool):
@@ -813,35 +935,52 @@ def grouped_sketch(
     """Per-group sketch states: returns one row per group with
     ``group_cols + [n_rows] + state_<name> binary`` columns.
 
-    Rows never shuffle: partition-local partial states are built in one
-    streaming pass, then only states move. ``salt_buckets=S`` adds a
-    pre-merge level on (key, partition mod S) to bound per-key fan-in on
-    very wide scans; the default (None) derives S from the scan's
-    partition count so fan-in stays ~256 at any width.
+    Mixed spec lists take the generic route: partition-local partial
+    states are built in one streaming pass, then only states move.
+    ``salt_buckets=S`` adds a pre-merge level on (key, partition mod S)
+    to bound per-key fan-in on very wide scans; the default (None)
+    derives S from the scan's partition count so fan-in stays ~256 at
+    any width.
 
-    All-HLL spec lists take a fully vectorized route instead: the packed
-    partial builder, one hash repartition on the group columns, and a
-    partition-wide register-max merge (`_vec_merge_builder`) — no per-key
-    ``applyInPandas`` and no salt level (the vectorized merge has no
-    per-key fan-in limit, so ``salt_buckets`` is moot there). Same bytes
-    out; the dispatch exists because a billion-group build (north_star:
-    distinct tools per conv_id) is output-bound, not group-loop-bound,
-    on this path.
+    All-HLL or all-KMV spec lists take a fully vectorized route instead:
+    no per-key ``applyInPandas`` and no salt level (the vectorized merge
+    has no per-key fan-in limit, so ``salt_buckets`` is moot there). The
+    dispatch exists because a billion-group build (north_star: distinct
+    tools per conv_id) is output-bound, not group-loop-bound, on this
+    path. ``pre_partial`` picks its stage-1 shape:
 
-    ``pre_partial`` picks the vectorized route's stage-1 shape (r6,
-    guide §2.3 "aggregate before you shuffle" — which cuts BOTH ways):
-
-    * ``True``: map-side partial states (the r5 plan) — right when each
-      scan partition repeats its group keys, so partials shrink the
-      exchange (low-cardinality keys, clustered layouts).
-    * ``False``: shuffle the raw (group, hash) projection once and build
-      FINAL states in a single post-shuffle pass. At group cardinality
-      near the row count (the 20M-conv bench shape, rows scattered by a
-      round-robin write) the partial route wraps, exchanges, and
-      re-parses ~one state blob per INPUT row — measured 69s vs 31s.
-    * ``None`` (default): decide from a bounded distinct-ratio sample of
-      the scan (``_preagg_dedup_ratio``; > 0.5 distinct per sampled row
-      =>> direct). One tiny ``limit`` job; never a full scan.
+    * ``False`` (``direct``): shuffle the raw (group, hash) projection
+      once and build FINAL states in a single post-shuffle pass (Arrow
+      native for single non-float keys). At group cardinality near the
+      row count the partial route wraps, exchanges, and re-parses ~one
+      state blob per INPUT row — measured 69s vs 31s at 20M groups.
+    * ``True`` (``pre_partial``): map-side partial states, one state
+      shuffle, a partition-wide merge (`_vec_merge_builder`). Right when
+      scan partitions repeat their keys, so partials shrink the
+      exchange. It is also the skew guard: a hot key then costs one
+      partial state per scan partition instead of piling all its rows
+      into one exchange task.
+    * ``None`` (default): decide from a dispatch sample
+      (``_dispatch_sample``: 65,536 of the scan's leading rows, one
+      ``limit`` job, no aggregate stage) holding each row's key hash and
+      its task in the direct exchange. ``pre_partial`` when the sample
+      holds at least 256 rows per distinct key — map-side partials then
+      fold most rows before the shuffle — or when its fullest task holds
+      over twice the mean and over what uniform hashing reaches by
+      chance (``_load_limit``); ``direct`` otherwise. Each decision is
+      logged on ``probably_jl_spark.grouped`` (``record.grouped_route``).
+      Measured on a 4-core box, P = 4, 12M synthetic rows in 16 scan
+      partitions, HLL over a distinct item per row, medians of 3,
+      pre_partial vs direct: 5 keys 2.3 vs 3.7 s; 50 keys 2.6 vs 3.7;
+      100 keys 3.4 vs 3.6; 200 keys 3.7 vs 3.8; 500 keys 4.2 vs 3.9; 1k
+      keys 3.7 vs 3.4; 10k keys 4.2 vs 3.4; 100k keys 8.3 vs 3.8; 3M
+      keys of 4 clustered rows 5.5 vs 3.7 s. The crossover sits near
+      256 sampled rows per key. Keys that repeat their items move it
+      out: 1k keys over 1k distinct items took 2.6 vs 3.0 s, which the
+      rule still sends direct. On 289k transcript turns by
+      conversation (75k keys, ~4 rows each) direct took 0.60 s against
+      0.94 s. The sample job takes 0.13-0.18 s warm; the distinct count
+      over 200k rows it replaces took 0.5 s.
 
     Both shapes emit byte-identical states — HLL/KMV states are pure set
     functions of the hashes seen (gated by
@@ -851,9 +990,7 @@ def grouped_sketch(
         kernel = _VEC_KERNELS[next(iter(kinds))](specs)
         spec_cols, col_map = plan_columns(specs)
         prepared = df.select(*[F.col(c) for c in group_cols], *spec_cols)
-        if pre_partial is None:
-            pre_partial = _preagg_dedup_ratio(prepared, group_cols, 200_000) <= 0.5
-        if not pre_partial:
+        if not _choose_pre_partial(prepared, group_cols, pre_partial):
             out_schema = _grouped_schema(prepared, group_cols, specs, with_ord=False)
             shuffled = prepared.repartition(*group_cols)
             from pyspark.sql.types import DoubleType, FloatType

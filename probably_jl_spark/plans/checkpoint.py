@@ -170,9 +170,10 @@ class CheckpointedSketchBuild:
             # the write populates the cache, and `produced` below reads
             # the cached result instead of a second full source scan
             # (code-review r5 — resume paid 2x source I/O)
-            # pre_partial pinned: bucket keys are coarse by construction,
-            # so the map-side-partial shape is always right here and the
-            # default's cardinality-sample job is skipped
+            # pre_partial pinned: bucket keys are coarse by construction
+            # (<= n_buckets keys), so map-side partials shrink each scan
+            # partition to <= n_buckets state rows before the shuffle;
+            # pinning also skips the default's dispatch sample job
             per_bucket = grouped_sketch(
                 bucketed, [BUCKET_COL], self.specs, pre_partial=True
             ).persist()

@@ -99,8 +99,8 @@ def hll_grouped_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hll_grouped_orders_by_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming grouped build over a key whose cardinality scales with SF
     (one group per supplier): distinct orders per l_suppkey. Exercises the
-    partition-local partial-state path — no row shuffle, states only
-    (operators/grouped.py)."""
+    all-HLL route's default dispatch (operators/grouped.py): suppliers
+    repeat (~600 sampled rows each at sf0.01), so map-side partials."""
     li = _t(spark, sf_dir, "lineitem")
     states = grouped_sketch(
         li, ["l_suppkey"], [SketchSpec("o", "hll", key_cols=("l_orderkey",))]
@@ -122,9 +122,9 @@ def hll_grouped_orders_by_supplier(spark: SparkSession, sf_dir: str) -> DataFram
 def hll_grouped_parts_by_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """High-cardinality grouped build — one group per l_orderkey (~15k at
     sf0.01, scales with SF): distinct parts per order. Exercises the
-    all-HLL vectorized route (packed partial builder + partition-wide
-    register-max merge, operators/grouped.py::_vec_merge_builder) where
-    output rows ~ input rows / 4. Gate: per-group estimates within
+    all-HLL vectorized route (operators/grouped.py; no order is a hot
+    key, so the default takes the one-pass direct build) where output
+    rows ~ input rows / 4. Gate: per-group estimates within
     max(2, 3sigma*n) of exact — at tiny per-group n the only error source
     is register collisions (P ~ n^2/2m per group), an ABSOLUTE error of 1
     per collision, so the relative 1.04/sqrt(m) bound is the wrong model
@@ -155,8 +155,7 @@ def hll_grouped_parts_by_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def kmv_grouped_parts_by_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """High-cardinality grouped KMV (vectorized (group, hash) k-min route,
-    operators/grouped.py::_vec_partial_builder + _KmvKernel): distinct parts per
-    l_orderkey. Per-order distinct counts sit far below k=1024, where a
+    operators/grouped.py::_KmvKernel): distinct parts per l_orderkey. Per-order distinct counts sit far below k=1024, where a
     KMV sketch holds EVERY distinct hash — so the oracle demands exact
     equality of the estimates, not a bound (64-bit hash collisions are
     the only caveat, deterministic for fixed data)."""

@@ -290,8 +290,9 @@ def windowed_sketch_stream(
         # pointless extra plan conversion per batch. (The probe itself is
         # safe on foreachBatch callback threads — see grouped.py; an
         # earlier hang here was the py4j per-byte read, not .rdd.)
-        # pre_partial pinned: window keys are few per micro-batch, and the
-        # default's cardinality-sample job would add per-batch latency
+        # pre_partial pinned: window keys are few per micro-batch, so the
+        # default would pick map-side partials for repeated keys anyway,
+        # and its dispatch sample job would add per-batch latency
         rows = grouped_sketch(
             win, ["__win"], specs, salt_buckets=1, pre_partial=True
         ).collect()

@@ -3,6 +3,8 @@ parquet == single-process build on collected rows (byte-identical for
 HLL/CMS/Bloom given the deterministic hashing contract); salted ==
 unsalted; grouped sketches; synthetic transcripts determinism."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -243,14 +245,15 @@ def test_preagg_cms_byte_identical(spark, events):
 def test_grouped_flush_cap_is_lossless(spark, events):
     """Bounded-memory stage 1: forcing mid-partition state flushes (cap=3
     on ~150 distinct user groups) must yield byte-identical merged states
-    for commutative kinds and identical n_rows."""
+    for commutative kinds and identical n_rows. The flushed build pins
+    the map-side partial route, where the cap applies."""
     specs = [SketchSpec("t", "hll", key_cols=("event_type",))]
     base = (
         grouped_sketch(events, ["user_id"], specs)
         .toPandas().set_index("user_id").sort_index()
     )
     flushed = (
-        grouped_sketch(events, ["user_id"], specs, max_states_per_partition=3)
+        grouped_sketch(events, ["user_id"], specs, max_states_per_partition=3, pre_partial=True)
         .toPandas().set_index("user_id").sort_index()
     )
     assert list(base.index) == list(flushed.index)
@@ -260,16 +263,26 @@ def test_grouped_flush_cap_is_lossless(spark, events):
 
 
 def test_grouped_no_row_shuffle(spark, events):
-    """The streaming grouped plan must shuffle serialized states, not input
-    rows: exactly one Exchange (plus the salt level if requested), and it
-    sits ABOVE the mapInPandas partial build."""
-    specs = [SketchSpec("u", "hll", key_cols=("user_id",))]
-    plan = grouped_sketch(events, ["event_type"], specs)._jdf.queryExecution().executedPlan().toString()
-    # one exchange for the per-key state merge; the row scan feeds
-    # MapInPandas directly with no exchange below it
-    assert plan.count("Exchange") == 1
-    before_exchange = plan.split("Exchange")[-1]  # bottom of the plan tree
-    assert "MapInPandas" in before_exchange
+    """The streaming grouped plans — the generic route and the vectorized
+    map-side partial route (pinned here: the default picks between it
+    and the direct route, which shuffles rows by design) — must shuffle
+    serialized states, not input rows: exactly one Exchange (plus the
+    salt level if requested), and it sits ABOVE the mapInPandas partial
+    build."""
+    for specs, pre_partial in (
+        ([SketchSpec("u", "hll", key_cols=("user_id",))], True),
+        ([SketchSpec("u", "hll", key_cols=("user_id",)),
+          SketchSpec("v", "kll", value_col="value")], None),
+    ):
+        plan = (
+            grouped_sketch(events, ["event_type"], specs, pre_partial=pre_partial)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        # one exchange for the per-key state merge; the row scan feeds
+        # MapInPandas directly with no exchange below it
+        assert plan.count("Exchange") == 1
+        before_exchange = plan.split("Exchange")[-1]  # bottom of the plan tree
+        assert "MapInPandas" in before_exchange
 
 
 def test_sql_estimator_functions(spark, events):
@@ -532,9 +545,10 @@ def test_grouped_auto_salt_bounds_fan_in(spark, events):
 
 def test_grouped_hll_fast_path_byte_identical(spark, events):
     """All-HLL spec lists dispatch to the vectorized packed-entries
-    builder + partition-wide register-max merge. Gate: partials AND the
-    final grouped output are byte-identical to the generic dict builder /
-    per-key applyInPandas route, across flush caps, NaN float keys, and
+    builder + partition-wide register-max merge (pre_partial) or the
+    one-pass direct build. Gate: partials AND the final grouped output of
+    both shapes are byte-identical to the generic dict builder / per-key
+    applyInPandas route, across flush caps, NaN float keys, and
     multi-column group keys."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
@@ -558,20 +572,23 @@ def test_grouped_hll_fast_path_byte_identical(spark, events):
 
     def assert_same(df, group_cols, specs, cap=1 << 16):
         key = list(group_cols)
-        fast = (
-            grouped_sketch(df, group_cols, specs, max_states_per_partition=cap)
-            .toPandas().sort_values(key, na_position="first").reset_index(drop=True)
-        )
         gen = (
             generic_route(df, group_cols, specs, cap)
             .toPandas().sort_values(key, na_position="first").reset_index(drop=True)
         )
-        assert len(fast) == len(gen)
-        assert (fast["n_rows"] == gen["n_rows"]).all()
-        for s in specs:
-            assert all(
-                a == b for a, b in zip(fast[s.state_col], gen[s.state_col])
-            ), s.name
+        for pre_partial in (True, False):
+            fast = (
+                grouped_sketch(
+                    df, group_cols, specs, max_states_per_partition=cap, pre_partial=pre_partial
+                )
+                .toPandas().sort_values(key, na_position="first").reset_index(drop=True)
+            )
+            assert len(fast) == len(gen)
+            assert (fast["n_rows"] == gen["n_rows"]).all()
+            for s in specs:
+                assert all(
+                    a == b for a, b in zip(fast[s.state_col], gen[s.state_col])
+                ), (s.name, pre_partial)
 
     specs = [SketchSpec("u", "hll", key_cols=("user_id",))]
     assert_same(events.repartition(5), ["event_type"], specs)
@@ -599,14 +616,15 @@ def test_grouped_hll_fast_path_dense_partials(spark, events):
     """A group whose partial crosses m/8 nonzero registers ships a dense
     v1 blob; the vectorized merge must decode both wire versions. p=6
     (m=64, densify above 8 entries) forces dense partials on ~150
-    distinct users per group."""
+    distinct users per group. Pinned to the partial route: the default
+    builds these un-skewed keys directly, with no partials to merge."""
     from probably_jl_spark.operators.grouped import grouped_sketch
     from probably_jl_spark.sketches import codec
     from probably_jl_spark.sketches.hll import HyperLogLog
 
     specs = [SketchSpec("u", "hll", key_cols=("user_id",), params={"p": 6})]
     out = (
-        grouped_sketch(events.repartition(3), ["event_type"], specs)
+        grouped_sketch(events.repartition(3), ["event_type"], specs, pre_partial=True)
         .toPandas().set_index("event_type").sort_index()
     )
     exact = {
@@ -626,9 +644,9 @@ def test_grouped_hll_fast_path_dense_partials(spark, events):
 
 def test_grouped_kmv_fast_path_byte_identical(spark, events):
     """All-KMV spec lists take the vectorized (group, hash) k-min route;
-    gate: byte-identical to the generic dict builder / per-key
-    applyInPandas route, across flush caps and multi-spec lists, and
-    exact per-group distincts below capacity."""
+    gate: both of its shapes (pre_partial, direct) byte-identical to the
+    generic dict builder / per-key applyInPandas route, across flush caps
+    and multi-spec lists, and exact per-group distincts below capacity."""
     from pyspark.sql.types import StructType
 
     from probably_jl_spark.operators.grouped import (
@@ -647,18 +665,23 @@ def test_grouped_kmv_fast_path_byte_identical(spark, events):
 
     def assert_same(df, group_cols, specs, cap=1 << 16):
         key = list(group_cols)
-        fast = (
-            grouped_sketch(df, group_cols, specs, max_states_per_partition=cap)
-            .toPandas().sort_values(key, na_position="first").reset_index(drop=True)
-        )
         gen = (
             generic_route(df, group_cols, specs, cap)
             .toPandas().sort_values(key, na_position="first").reset_index(drop=True)
         )
-        assert len(fast) == len(gen)
-        assert (fast["n_rows"] == gen["n_rows"]).all()
-        for s in specs:
-            assert all(a == b for a, b in zip(fast[s.state_col], gen[s.state_col])), s.name
+        for pre_partial in (True, False):
+            fast = (
+                grouped_sketch(
+                    df, group_cols, specs, max_states_per_partition=cap, pre_partial=pre_partial
+                )
+                .toPandas().sort_values(key, na_position="first").reset_index(drop=True)
+            )
+            assert len(fast) == len(gen)
+            assert (fast["n_rows"] == gen["n_rows"]).all()
+            for s in specs:
+                assert all(
+                    a == b for a, b in zip(fast[s.state_col], gen[s.state_col])
+                ), (s.name, pre_partial)
 
     assert_same(
         events.repartition(5), ["event_type"],
@@ -754,13 +777,18 @@ def test_synth_transcripts_monotone_ts(spark):
     assert neg == 0
 
 
-def test_grouped_direct_route_byte_identical(spark, events):
+def test_grouped_direct_route_byte_identical(spark, events, caplog):
     """The r6 direct route (pre_partial=False: raw rows shuffle once,
     final states built in a single post-shuffle pass) must emit states
     and n_rows byte-identical to the partial route — HLL/KMV states are
     pure set functions of the hashes seen, so the stage-1 shape cannot
     show in the output. Also pins the auto decision's two regimes."""
-    from probably_jl_spark.operators.grouped import _preagg_dedup_ratio, grouped_sketch
+    from probably_jl_spark.operators.grouped import (
+        _dispatch_sample,
+        _exchange_partitions,
+        _load_limit,
+        grouped_sketch,
+    )
 
     for specs in (
         [SketchSpec("u", "hll", key_cols=("user_id",))],
@@ -779,11 +807,206 @@ def test_grouped_direct_route_byte_identical(spark, events):
             assert len(a) == len(b)
             assert (a["n_rows"] == b["n_rows"]).all()
             assert all(x == y for x, y in zip(a["state_u"], b["state_u"]))
-    # decision input: few distinct groups => low ratio (partial route),
-    # all-distinct keys => ratio ~1 (direct route)
+    # decision inputs: all-distinct keys => one row per key, hottest
+    # share 1/n, even task loads (direct route); a key holding 60% of the
+    # rows overloads its exchange task (pre_partial)
+    nparts = _exchange_partitions(spark)
+    assert nparts > 1
     ev = events.select("event_type", "user_id", "event_id")
-    assert _preagg_dedup_ratio(ev, ["event_type"], 200_000) <= 0.5
-    assert _preagg_dedup_ratio(ev, ["event_id"], 200_000) > 0.5
+    n, keys, hot, fullest = _dispatch_sample(ev, ["event_id"], nparts)
+    assert (n, keys, hot) == (1000, 1000, 1 / 1000)
+    assert fullest * n <= _load_limit(n, nparts)
+    hot_df = ev.withColumn(
+        "hk",
+        F.when(F.col("event_id") % 5 < 3, F.lit("hot")).otherwise(F.col("event_id").cast("string")),
+    )
+    n, keys, hot, fullest = _dispatch_sample(hot_df, ["hk"], nparts)
+    assert (n, keys) == (1000, 401) and hot == 0.6
+    assert fullest >= hot and fullest * n > _load_limit(n, nparts)
+    # multi-column keys count as tuples: the hot key split 5 ways by
+    # event_type leaves every tuple below 1/P
+    assert _dispatch_sample(hot_df, ["hk", "event_type"], nparts)[2] < 1 / nparts
+
+    # the auto route on the hot key takes pre_partial, with states
+    # byte-identical to the pinned direct build
+    specs = [SketchSpec("u", "hll", key_cols=("user_id",))]
+    caplog.set_level("INFO", logger="probably_jl_spark.grouped")
+    caplog.clear()
+    auto = grouped_sketch(hot_df.repartition(4), ["hk"], specs)
+    routes = [r.grouped_route["route"] for r in caplog.records if r.name == "probably_jl_spark.grouped"]
+    assert routes == ["pre_partial"]
+    direct = grouped_sketch(hot_df.repartition(3), ["hk"], specs, pre_partial=False)
+    a = auto.toPandas().sort_values("hk").reset_index(drop=True)
+    b = direct.toPandas().sort_values("hk").reset_index(drop=True)
+    assert len(a) == len(b) == 401
+    assert (a["n_rows"] == b["n_rows"]).all()
+    assert all(x == y for x, y in zip(a["state_u"], b["state_u"]))
+
+
+def test_grouped_route_decision_event(spark, events, caplog):
+    """Every vectorized-route decision logs one structured event with its
+    inputs: route, pinned, sampled rows, distinct keys, hottest key's and
+    fullest exchange task's shares, P and the sample's seconds — for both
+    auto outcomes and for a pinned call (which runs no sample)."""
+    from probably_jl_spark.operators.grouped import _exchange_partitions, grouped_sketch
+
+    nparts = _exchange_partitions(spark)
+    specs = [SketchSpec("u", "kmv", key_cols=("user_id",), params={"k": 64})]
+    hot = events.withColumn(
+        "hk", F.when(F.col("event_id") % 5 < 3, F.lit(-1)).otherwise(F.col("event_id"))
+    )
+    caplog.set_level("INFO", logger="probably_jl_spark.grouped")
+    caplog.clear()
+    grouped_sketch(events, ["event_id"], specs)
+    grouped_sketch(hot, ["hk"], specs)
+    grouped_sketch(hot, ["hk"], specs, pre_partial=False)
+    recs = [r for r in caplog.records if r.name == "probably_jl_spark.grouped"]
+    ev = [r.grouped_route for r in recs]
+    assert [e["route"] for e in ev] == ["direct", "pre_partial", "direct"]
+    assert [e["pinned"] for e in ev] == [False, False, True]
+    for e in ev[:2]:
+        assert e["sample_rows"] == 1000
+        assert e["shuffle_partitions"] == nparts
+        assert e["sample_s"] > 0
+    assert ev[0]["distinct_keys"] == 1000 and ev[0]["hot_share"] == 1 / 1000
+    assert ev[0]["fullest_share"] < 2 / nparts
+    assert ev[1]["distinct_keys"] == 401 and ev[1]["hot_share"] == 0.6
+    assert ev[1]["fullest_share"] >= 0.6
+    assert ev[2]["sample_rows"] == 0 and ev[2]["hot_share"] is None
+    assert ev[2]["distinct_keys"] is None and ev[2]["fullest_share"] is None
+    assert "route=pre_partial" in recs[1].getMessage()
+
+
+def test_grouped_route_rule_repeat_and_load(spark, caplog):
+    """The auto dispatch's two reasons for ``pre_partial``, each alone:
+    (1) repeated keys — at least 256 sampled rows per distinct key, where
+    map-side partials fold most rows — with even task loads; (2) an
+    overloaded direct exchange with no hot key and few rows per key —
+    K = 17 equal keys over P = 16 tasks, where hashing piles three keys
+    into one task. Keys below both limits take ``direct``. The sample's
+    fullest task matches the one ``repartition(P, *keys)`` measures, and
+    every auto build matches the pinned-direct states byte for byte."""
+    from probably_jl_spark.operators.grouped import (
+        _dispatch_sample,
+        _exchange_partitions,
+        _load_limit,
+        grouped_sketch,
+    )
+
+    specs = [SketchSpec("u", "hll", key_cols=("v",))]
+    caplog.set_level("INFO", logger="probably_jl_spark.grouped")
+
+    def keyed(rows, nkeys):
+        return (
+            spark.range(0, rows, numPartitions=4)
+            .withColumn("v", F.col("id") * 7)
+            .withColumn("g", F.col("id") % nkeys)
+        )
+
+    def auto_route(df, nparts):
+        n, keys, hot, fullest = _dispatch_sample(df.select("g"), ["g"], nparts)
+        repeat = n >= 256 * keys
+        overload = round(fullest * n) > _load_limit(n, nparts)
+        caplog.clear()
+        auto = grouped_sketch(df, ["g"], specs).toPandas()
+        (route,) = [
+            r.grouped_route["route"] for r in caplog.records if r.name == "probably_jl_spark.grouped"
+        ]
+        assert route == ("pre_partial" if repeat or overload else "direct")
+        direct = grouped_sketch(df, ["g"], specs, pre_partial=False).toPandas()
+        a = auto.sort_values("g").reset_index(drop=True)
+        b = direct.sort_values("g").reset_index(drop=True)
+        assert len(a) == len(b) == keys
+        assert (a["n_rows"] == b["n_rows"]).all()
+        assert all(x == y for x, y in zip(a["state_u"], b["state_u"]))
+        return repeat, overload, hot
+
+    def fullest_task(df, nparts):
+        """Rows of the fullest task of the direct exchange, measured."""
+        loads = df.repartition(nparts, "g").groupBy(F.spark_partition_id()).count().collect()
+        return max(r["count"] for r in loads)
+
+    nparts = _exchange_partitions(spark)
+    # 32 keys x 512 rows: repeated, spread evenly over the P tasks
+    rep = keyed(1 << 14, 32)
+    assert fullest_task(rep, nparts) * nparts < 2 * (1 << 14)
+    assert auto_route(rep, nparts)[:2] == (True, False)
+    # 4096 keys x 4 rows: neither reason holds
+    assert auto_route(keyed(1 << 14, 4096), nparts)[:2] == (False, False)
+
+    def planned_partitions(df):
+        """Partition count of the planned ``repartition("g")`` exchange."""
+        plan = df.repartition("g")._jdf.queryExecution().executedPlan().toString()
+        return int(re.search(r"hashpartitioning\(g#\d+L?, (\d+)\)", plan).group(1))
+
+    initial = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try:
+        few = keyed(1 << 12, 17)  # 241 rows per key
+        assert _exchange_partitions(spark) == planned_partitions(few) == 16
+        spark.conf.set(initial, "8")
+        assert _exchange_partitions(spark) == planned_partitions(few) == 8
+        spark.conf.unset(initial)
+        # the sample (here the whole input) sees the exchange's task loads
+        n, _, _, fullest = _dispatch_sample(few.select("g"), ["g"], 16)
+        assert fullest * n == fullest_task(few, 16) > 2 * n / 16
+        repeat, overload, hot = auto_route(few, 16)
+        assert hot < 1 / 16 and not repeat and overload
+    finally:
+        spark.conf.unset(initial)
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _arrow_build(specs, batches):
+    from probably_jl_spark.operators.build import plan_columns
+    from probably_jl_spark.operators.grouped import _VEC_KERNELS, _vec_direct_builder_arrow
+
+    _, col_map = plan_columns(specs)
+    kernel = _VEC_KERNELS[specs[0].kind](specs)
+    return list(_vec_direct_builder_arrow(specs, ["g"], col_map, kernel)(iter(batches)))
+
+
+def test_grouped_arrow_emit_chunks_byte_identical(monkeypatch):
+    """The Arrow emitter splits its output into RecordBatches under
+    ``_EMIT_BYTES`` of state bytes each (BinaryArray offsets are int32).
+    Split output must be byte-identical to the one-chunk emit — including
+    one-row chunks for blobs larger than the cap — and a chunk whose bytes
+    reach the int32 offset range must fail loudly, not wrap."""
+    import pyarrow as pa
+
+    from probably_jl_spark.operators import grouped as G
+
+    rs = np.random.default_rng(7)
+    batches = []
+    for _ in range(3):
+        n = 5000
+        keys = [None if i % 97 == 0 else f"g{int(x)}" for i, x in enumerate(rs.integers(0, 300, n))]
+        h = rs.integers(-(2**63), 2**63 - 1, size=(2, n), dtype=np.int64)
+        batches.append(
+            pa.RecordBatch.from_arrays(
+                [pa.array(keys, pa.string()), pa.array(h[0]), pa.array(h[1])],
+                names=["g", "__h0", "__h1"],
+            )
+        )
+    for specs in (
+        [SketchSpec("u", "hll", key_cols=("u",)), SketchSpec("w", "hll", key_cols=("w",))],
+        [SketchSpec("u", "kmv", key_cols=("u",), params={"k": 16}),
+         SketchSpec("w", "kmv", key_cols=("w",), params={"k": 64})],
+    ):
+        one = _arrow_build(specs, batches)
+        assert len(one) == 1
+        want = pa.Table.from_batches(one).to_pydict()
+        assert len(want["g"]) == 301 and want["g"][-1] is None
+        for cap in (4096, 16):  # several groups per chunk; one row per chunk
+            monkeypatch.setattr(G, "_EMIT_BYTES", cap)
+            split = _arrow_build(specs, batches)
+            assert len(split) > 1
+            assert pa.Table.from_batches(split).to_pydict() == want
+        monkeypatch.setattr(G, "_OFFSET_LIMIT", 64)
+        with pytest.raises(OverflowError, match="int32 offset"):
+            _arrow_build(specs, batches)
+        monkeypatch.undo()
 
 
 def test_grouped_arrow_route_null_and_float_keys(spark, events):
@@ -862,3 +1085,25 @@ def test_tree_merge_heavy_states_keep_tree():
     assert 256 * _est_partial_bytes(heavy) > _DRIVER_MERGE_MAX_BYTES
     light = [SketchSpec("u", "hll", key_cols=("u",))]
     assert 256 * _est_partial_bytes(light) <= _DRIVER_MERGE_MAX_BYTES
+
+
+def test_tree_merge_empty_input(spark, events):
+    """An empty DataFrame builds to empty sketches and ``__n_rows`` 0, and
+    a partials table without any rows (e.g. filtered, or read back from
+    an empty write) merges to the same on both the driver fold and the
+    tree path instead of failing."""
+    light = [
+        SketchSpec("u", "hll", key_cols=("user_id",)),
+        SketchSpec("td", "tdigest", value_col="value"),
+    ]
+    empty = spark.createDataFrame([], events.schema)
+    partials = build_partials(empty, light, lineage=False).filter(F.lit(False))
+    assert partials.count() == 0
+    for depth in (None, 2):
+        out = tree_merge(partials, light, depth=depth)
+        assert out["__n_rows"] == 0
+        for s in light:
+            assert out[s.name].to_bytes() == s.new().to_bytes()
+    res = sketch_table(empty, light)
+    assert res.n_rows == 0
+    assert res.sketches["u"].to_bytes() == light[0].new().to_bytes()
