@@ -6,8 +6,8 @@ frozen driver contract) — numbers from here are cited in
 OPTIMIZATION_r06.md, plans land in plans/r06/.
 
 Usage: python bench_extra.py <target> [<target> ...]
-Targets: grouped_conv grouped_role rollup simhash clean clean_map
-         cosine ivf fused probe lineitem all
+Targets: grouped_conv grouped_multikey grouped_role rollup simhash
+         clean clean_map cosine ivf fused probe lineitem all
 Env: PJS_PLANDIR=plans/r06 to also write explain files.
 """
 
@@ -130,6 +130,27 @@ def t_grouped_conv(spark, plans=False):
     with timed("grouped_hll_by_conv.count", spark):
         n = out.count()
     print(f"    groups={n}", file=sys.stderr)
+
+
+def t_grouped_multikey(spark, plans=False):
+    """All-HLL direct build keyed on two columns, (conv_id, role): the
+    one-pass Arrow build over a multi-column key, a shape the perfbench
+    workloads do not run."""
+    from probably_jl_spark.operators.grouped import grouped_sketch
+    from probably_jl_spark.operators.specs import SketchSpec
+
+    tr = tr_df(spark)
+    with timed("grouped_multikey.scan_warm", spark):
+        tr.count()
+    out = grouped_sketch(
+        tr, ["conv_id", "role"], [SketchSpec("tools", "hll", key_cols=("tool",))],
+        pre_partial=False,
+    )
+    if plans:
+        write_plan(out, "grouped_hll_by_conv_role.txt")
+    for i in range(3):
+        with timed(f"grouped_multikey.noop.{i}", spark):
+            noop(out)
 
 
 def t_grouped_role(spark, plans=False):
@@ -366,6 +387,7 @@ def t_lineitem(spark, plans=False):
 
 TARGETS = {
     "grouped_conv": t_grouped_conv,
+    "grouped_multikey": t_grouped_multikey,
     "grouped_role": t_grouped_role,
     "rollup": t_rollup,
     "simhash": t_simhash,

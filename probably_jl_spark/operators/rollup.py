@@ -15,6 +15,8 @@ streaming pass, rows pre-sorted by (key, origin order) so
 merge-order-sensitive kinds (t-digest, KLL, cuckoo) apply partials in
 ascending partition order — the same determinism law as the grouped
 build, with no per-key pandas group materialization at any fan-in.
+Stage 2 is ``merge_state_rows``, which is also the merge of the grouped
+build's ``pre_partial`` route: one merge stage for both.
 
 Column routing is detected executor-side from the blobs' own kind bytes:
 HLL and KMV columns delegate to the grouped build's vectorized kernels
@@ -30,13 +32,12 @@ order-sensitive kinds stay inside their published bounds.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ..sketches import codec
-from .grouped import _ORD_COL, _NROWS_COL, _VEC_KERNELS, _group_codes
+from .grouped import _NROWS_COL, _ORD_COL, _VEC_KERNELS, _emit_state_rows, _group_codes
 from .specs import SketchSpec, merge_blobs
 
 
@@ -150,17 +151,8 @@ def _rollup_builder(
 
         def emit(ord_key):
             n = len(keys_index)
-            if len(group_cols) == 1:
-                out = pd.DataFrame({group_cols[0]: keys_index})
-            else:
-                out = keys_index.to_frame(index=False)
-                out.columns = list(group_cols)
-            if ord_key is not None:
-                out[_ORD_COL] = ord_key
-            out[_NROWS_COL] = n_rows[:n]
-            for c in state_cols:
-                out[c] = cols[c].emit_blobs(n)
-            return out
+            states = {c: cols[c].emit_blobs(n) for c in state_cols}
+            return _emit_state_rows(group_cols, keys_index, n_rows, ord_key, states)
 
         for pdf in batches:
             if not len(pdf):
@@ -185,6 +177,27 @@ def _rollup_builder(
             yield emit(((pid << 20) | flush) if with_ord else None)
 
     return fn
+
+
+def merge_state_rows(
+    partials: DataFrame, group_cols: list[str], state_cols: list[str]
+) -> DataFrame:
+    """The merge stage shared by ``rollup_states`` and the grouped
+    build's ``pre_partial`` route: hash-repartition state rows (group
+    columns, ``__ord``, ``n_rows``, state columns) on the group columns,
+    sort each partition by (key, ``__ord``), and fold it in one streaming
+    pass — one output row per group, without ``__ord``. Holds one input
+    batch of state rows at a time besides the merged groups, and has no
+    per-key fan-in limit."""
+    out_schema = StructType([f for f in partials.schema.fields if f.name != _ORD_COL])
+    return (
+        partials.repartition(*group_cols)
+        .sortWithinPartitions(*group_cols, _ORD_COL)
+        .mapInPandas(
+            _rollup_builder(group_cols, state_cols, None, with_ord=False),
+            schema=out_schema,
+        )
+    )
 
 
 def rollup_states(
@@ -237,15 +250,7 @@ def rollup_states(
         _rollup_builder(all_group, state_cols, max_states_per_partition, with_ord=True),
         schema=part_schema,
     )
-    out_schema = StructType([f for f in part_schema.fields if f.name != _ORD_COL])
-    out = (
-        partials.repartition(*all_group)
-        .sortWithinPartitions(*all_group, _ORD_COL)
-        .mapInPandas(
-            _rollup_builder(all_group, state_cols, None, with_ord=False),
-            schema=out_schema,
-        )
-    )
+    out = merge_state_rows(partials, all_group, state_cols)
     if not group_cols:
         out = out.drop("__all")
     return out

@@ -543,6 +543,27 @@ def test_grouped_auto_salt_bounds_fan_in(spark, events):
         )
 
 
+def _float_edge_keys(events):
+    """A double key mixing null, NaN, -0.0, 0.0 and plain values."""
+    u = F.col("user_id")
+    return events.withColumn(
+        "fkey",
+        F.when(u % 6 == 0, F.lit(None).cast("double"))
+        .when(u % 6 == 1, F.lit(float("nan")))
+        .when(u % 6 == 2, F.lit(-0.0))
+        .when(u % 6 == 3, F.lit(0.0))
+        .otherwise((u % 4).cast("double")),
+    )
+
+
+def _null_pair_keys(events):
+    """A two-column key with nulls in both columns (and in both at once)."""
+    u = F.col("user_id")
+    return events.withColumn(
+        "a", F.when(u % 3 == 0, F.lit(None)).otherwise(F.col("event_type"))
+    ).withColumn("b", F.when(u % 4 == 0, F.lit(None)).otherwise(u % 5))
+
+
 def test_grouped_hll_fast_path_byte_identical(spark, events):
     """All-HLL spec lists dispatch to the vectorized packed-entries
     builder + partition-wide register-max merge (pre_partial) or the
@@ -584,6 +605,7 @@ def test_grouped_hll_fast_path_byte_identical(spark, events):
                 .toPandas().sort_values(key, na_position="first").reset_index(drop=True)
             )
             assert len(fast) == len(gen)
+            assert fast[key].equals(gen[key]), pre_partial
             assert (fast["n_rows"] == gen["n_rows"]).all()
             for s in specs:
                 assert all(
@@ -610,6 +632,9 @@ def test_grouped_hll_fast_path_byte_identical(spark, events):
         .otherwise((F.col("user_id") % 5).cast("double")),
     )
     assert_same(nanev.repartition(4), ["fkey"], specs)
+    # NaN groups with null and -0.0 with 0.0; two-column keys with nulls
+    assert_same(_float_edge_keys(events).repartition(4), ["fkey"], specs)
+    assert_same(_null_pair_keys(events).repartition(4), ["a", "b"], specs)
 
 
 def test_grouped_hll_fast_path_dense_partials(spark, events):
@@ -677,6 +702,7 @@ def test_grouped_kmv_fast_path_byte_identical(spark, events):
                 .toPandas().sort_values(key, na_position="first").reset_index(drop=True)
             )
             assert len(fast) == len(gen)
+            assert fast[key].equals(gen[key]), pre_partial
             assert (fast["n_rows"] == gen["n_rows"]).all()
             for s in specs:
                 assert all(
@@ -699,6 +725,9 @@ def test_grouped_kmv_fast_path_byte_identical(spark, events):
             SketchSpec("b", "kmv", key_cols=("user_id", "event_type"), params={"k": 128}),
         ],
     )
+    kspecs = [SketchSpec("u", "kmv", key_cols=("user_id",), params={"k": 16})]
+    assert_same(_float_edge_keys(events).repartition(4), ["fkey"], kspecs)
+    assert_same(_null_pair_keys(events).repartition(4), ["a", "b"], kspecs)
     # below-capacity exactness: per-group distinct users per type
     out = (
         grouped_sketch(
@@ -958,27 +987,32 @@ def test_grouped_route_rule_repeat_and_load(spark, caplog):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def _arrow_build(specs, batches):
+def _arrow_build(specs, batches, group_cols=("g",)):
     from probably_jl_spark.operators.build import plan_columns
     from probably_jl_spark.operators.grouped import _VEC_KERNELS, _vec_direct_builder_arrow
 
     _, col_map = plan_columns(specs)
     kernel = _VEC_KERNELS[specs[0].kind](specs)
-    return list(_vec_direct_builder_arrow(specs, ["g"], col_map, kernel)(iter(batches)))
+    return list(
+        _vec_direct_builder_arrow(specs, list(group_cols), col_map, kernel)(iter(batches))
+    )
 
 
-def test_grouped_arrow_emit_chunks_byte_identical(monkeypatch):
+def test_grouped_arrow_emit_chunks_byte_identical(spark, monkeypatch):
     """The Arrow emitter splits its output into RecordBatches under
     ``_EMIT_BYTES`` of state bytes each (BinaryArray offsets are int32).
     Split output must be byte-identical to the one-chunk emit — including
     one-row chunks for blobs larger than the cap — and a chunk whose bytes
-    reach the int32 offset range must fail loudly, not wrap."""
+    reach the int32 offset range must fail loudly, not wrap. Covered for a
+    one-column and a two-column key, both with nulls, whose groups come
+    out in first-seen order, the null key included, whether codes are
+    assigned once or per batch."""
     import pyarrow as pa
 
     from probably_jl_spark.operators import grouped as G
 
     rs = np.random.default_rng(7)
-    batches = []
+    batches, pair_batches = [], []
     for _ in range(3):
         n = 5000
         keys = [None if i % 97 == 0 else f"g{int(x)}" for i, x in enumerate(rs.integers(0, 300, n))]
@@ -989,32 +1023,51 @@ def test_grouped_arrow_emit_chunks_byte_identical(monkeypatch):
                 names=["g", "__h0", "__h1"],
             )
         )
+        b = [None if i % 89 == 0 else int(x) for i, x in enumerate(rs.integers(0, 7, n))]
+        pair_batches.append(
+            pa.RecordBatch.from_arrays(
+                [pa.array([None if i % 5 == 0 else k for i, k in enumerate(keys)], pa.string()),
+                 pa.array(b, pa.int64()), pa.array(h[0]), pa.array(h[1])],
+                names=["g", "b", "__h0", "__h1"],
+            )
+        )
     for specs in (
         [SketchSpec("u", "hll", key_cols=("u",)), SketchSpec("w", "hll", key_cols=("w",))],
         [SketchSpec("u", "kmv", key_cols=("u",), params={"k": 16}),
          SketchSpec("w", "kmv", key_cols=("w",), params={"k": 64})],
     ):
-        one = _arrow_build(specs, batches)
-        assert len(one) == 1
-        want = pa.Table.from_batches(one).to_pydict()
-        assert len(want["g"]) == 301 and want["g"][-1] is None
-        for cap in (4096, 16):  # several groups per chunk; one row per chunk
-            monkeypatch.setattr(G, "_EMIT_BYTES", cap)
-            split = _arrow_build(specs, batches)
-            assert len(split) > 1
-            assert pa.Table.from_batches(split).to_pydict() == want
-        monkeypatch.setattr(G, "_OFFSET_LIMIT", 64)
-        with pytest.raises(OverflowError, match="int32 offset"):
-            _arrow_build(specs, batches)
-        monkeypatch.undo()
+        for group_cols, inp in ((["g"], batches), (["g", "b"], pair_batches)):
+            one = _arrow_build(specs, inp, group_cols)
+            assert len(one) == 1
+            want = pa.Table.from_batches(one).to_pydict()
+            rows = pa.Table.from_batches(inp).select(group_cols).to_pylist()
+            first_seen = list(dict.fromkeys(tuple(r.values()) for r in rows))
+            assert list(zip(*(want[c] for c in group_cols))) == first_seen
+            if group_cols == ["g"]:
+                assert len(first_seen) == 301 and want["g"][0] is None
+            else:
+                assert (None, None) in first_seen  # null in both columns at once
+            # a consolidation per batch: known keys lead each re-encode
+            monkeypatch.setattr(G, "_FOLD_ROWS", 1)
+            assert pa.Table.from_batches(_arrow_build(specs, inp, group_cols)).to_pydict() == want
+            monkeypatch.undo()
+            for cap in (4096, 16):  # several groups per chunk; one row per chunk
+                monkeypatch.setattr(G, "_EMIT_BYTES", cap)
+                split = _arrow_build(specs, inp, group_cols)
+                assert len(split) > 1
+                assert pa.Table.from_batches(split).to_pydict() == want
+            monkeypatch.setattr(G, "_OFFSET_LIMIT", 64)
+            with pytest.raises(OverflowError, match="int32 offset"):
+                _arrow_build(specs, inp, group_cols)
+            monkeypatch.undo()
 
 
 def test_grouped_arrow_route_null_and_float_keys(spark, events):
-    """r6 Arrow-native direct builder edges: a NULL group key forms its
-    own group with states identical to the pandas/partial route (the
-    Arrow route buckets nulls and emits them last — only row ORDER may
-    differ, which sorting normalizes), and float group keys must take
-    the pandas route (Arrow would factorize NaN/-0.0 bitwise)."""
+    """Arrow-native direct builder edges: a NULL group key forms its own
+    group with states identical to the partial route (row ORDER may
+    differ, which sorting normalizes), and a float key's NaNs land in ONE
+    group on both routes (the JVM projection turns NaN into null before
+    the exchange, since Arrow encodes NaN bitwise)."""
     from probably_jl_spark.operators.grouped import grouped_sketch
 
     ev = events.withColumn(
@@ -1048,6 +1101,48 @@ def test_grouped_arrow_route_null_and_float_keys(spark, events):
     assert len(fa) == len(fb) == 2
     assert (fa["n_rows"] == fb["n_rows"]).all()
     assert all(x == y for x, y in zip(fa["state_u"], fb["state_u"]))
+
+
+def test_grouped_nan_and_null_float_key_one_group(spark):
+    """A double key holding nulls and NaNs forms ONE null-keyed group on
+    every route. The direct exchange hashes NaN and null to different
+    tasks (here 7 and 2 of 8), so before the JVM projection made NaN null
+    that route returned two null-keyed rows, with 3 and 4 rows."""
+    from pyspark.sql.types import StructType
+
+    from probably_jl_spark.operators.grouped import (
+        _ORD_COL,
+        _merge_groups,
+        _pre_merge_states,
+    )
+
+    rows = [(None, i) for i in range(4)] + [(float("nan"), 10 + i) for i in range(3)]
+    df = spark.createDataFrame(rows + [(1.0, 99)], "k double, u long").repartition(4)
+    specs = [SketchSpec("u", "hll", key_cols=("u",))]
+    conf = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    old = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        pre = _pre_merge_states(df, ["k"], specs, None, 1 << 16)
+        out_schema = StructType([f for f in pre.schema.fields if f.name != _ORD_COL])
+        outs = [
+            pre.groupBy("k").applyInPandas(
+                _merge_groups(specs, ["k"], with_ord=False), schema=out_schema
+            ).collect(),
+            grouped_sketch(df, ["k"], specs, pre_partial=True).collect(),
+            grouped_sketch(df, ["k"], specs, pre_partial=False).collect(),
+        ]
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    (want,) = [r["state_u"] for r in outs[0] if r["k"] is None]
+    for out in outs:
+        nulls = [(r["n_rows"], r["state_u"]) for r in out if r["k"] is None]
+        assert nulls == [(7, want)], out
 
 
 def test_tree_merge_driver_fold_equals_tree(spark, events):
