@@ -19,6 +19,10 @@ Two route families:
   - ``pre_partial`` builds map-side partial states and merges them with
     ``rollup.merge_state_rows``, the merge stage ``rollup_states`` uses.
 
+  The direct builder and that merge stage share one deferred
+  group-code fold (``_KeyFold``) and one Arrow emit
+  (``_arrow_state_batches``).
+
   ``grouped_sketch`` takes ``pre_partial`` when a bounded key sample
   shows repeated keys or a skewed exchange, and ``direct`` otherwise.
 
@@ -240,15 +244,14 @@ class _HllKernel:
     def absorb_rows(self, acc, spec, g: np.ndarray, h: np.ndarray):
         return self.absorb_payloads(acc, spec, g, self.row_payloads(spec, h))
 
-    def absorb_states(self, acc, spec, g: np.ndarray, blobs):
-        from ..sketches.hll import _dedup_max_rho, packed_entries_many_from_bytes
+    @staticmethod
+    def state_payloads(spec, flat, offs) -> tuple[np.ndarray, np.ndarray]:
+        """(entries per blob, the blobs' payloads in ``row_payloads``
+        form) of blobs laid end to end in ``flat`` at ``offs``: a state
+        absorbs as its entries, each under its blob's group code."""
+        from ..sketches.hll import packed_entries_many_from_buf
 
-        counts, ent = packed_entries_many_from_bytes(list(blobs))
-        if not ent.size:
-            return acc
-        packed = (np.repeat(g, counts) << np.int64(24)) | ent.astype(np.int64)
-        packed.sort()
-        return _absorb_max(acc, _dedup_max_rho(packed))
+        return packed_entries_many_from_buf(flat, offs)
 
     def emit_blobs(self, acc, spec, n: int) -> list:
         from ..sketches.hll import packed_entries_many_to_bytes
@@ -291,14 +294,11 @@ class _KmvKernel:
     def absorb_rows(self, acc, spec, g: np.ndarray, h: np.ndarray):
         return _kmv_combine(acc[0], acc[1], g, h, self.ks[spec.name])
 
-    def absorb_states(self, acc, spec, g: np.ndarray, blobs):
-        from ..sketches.kmv import mins_many_from_bytes
+    @staticmethod
+    def state_payloads(spec, flat, offs) -> tuple[np.ndarray, np.ndarray]:
+        from ..sketches.kmv import mins_many_from_buf
 
-        counts, hh = mins_many_from_bytes(list(blobs))
-        if not hh.size:
-            return acc
-        gg = np.repeat(g, counts)
-        return _kmv_combine(acc[0], acc[1], gg, hh, self.ks[spec.name])
+        return mins_many_from_buf(flat, offs)
 
     def emit_blobs(self, acc, spec, n: int) -> list:
         from ..sketches.kmv import mins_many_to_bytes
@@ -428,7 +428,9 @@ def _vec_partial_builder(
     return fn
 
 
-_FOLD_ROWS = 1 << 22  # pending rows per deferred consolidation (~4M, ~16 B/row held)
+# pending values per deferred consolidation (~4M, ~16 B each held): rows,
+# plus the merge stage's decoded state entries
+_FOLD_ROWS = 1 << 22
 # pa.BinaryArray offsets are int32: cap the state bytes per emitted batch
 _EMIT_BYTES = 1 << 29
 _OFFSET_LIMIT = 1 << 31  # a chunk's state bytes must stay below this
@@ -463,6 +465,103 @@ def _encode_keys(cols: list) -> tuple[np.ndarray, list]:
     return codes, [c.take(first) for c in cols]
 
 
+class _KeyFold:
+    """Deferred group-code assignment over Arrow key columns, shared by
+    the direct builder and the merge stage (``rollup.merge_state_rows``).
+    ``add`` encodes one batch's own keys (``_encode_keys``, C++) and
+    stashes (uniques, codes, row weights); ``codes`` consolidates: it
+    re-encodes the known keys followed by every stashed batch's uniques
+    (known keys lead, so existing codes keep their values), adds the
+    pending rows to ``n_rows`` and returns their group codes in arrival
+    order. Callers consolidate once per ``_FOLD_ROWS`` pending values:
+    re-encoding per batch instead rebuilt the key hash table every 64k
+    rows — O(live groups) per batch, the dominant cost of the 20M-group
+    bench build. ``keys`` holds, per group column, the unique values in
+    code order."""
+
+    def __init__(self):
+        self.keys = None
+        self.n_rows = np.empty(0, dtype=np.int64)
+        self.pending = 0
+        self._uniq: list = []
+        self._codes: list = []
+        self._weights: list = []
+
+    def add(self, cols: list, weights: np.ndarray | None = None) -> None:
+        codes, uniq = _encode_keys(cols)
+        self._uniq.append(uniq)
+        self._codes.append(codes)
+        self._weights.append(weights)
+        self.pending += codes.size
+
+    def codes(self) -> np.ndarray:
+        import pyarrow as pa
+
+        if not self._uniq:
+            return np.empty(0, dtype=np.int64)
+        parts = ([] if self.keys is None else [self.keys]) + self._uniq
+        codes, self.keys = _encode_keys(
+            [pa.concat_arrays([p[i] for p in parts]) for i in range(len(parts[0]))]
+        )
+        offs = np.zeros(len(parts) + 1, dtype=np.int64)
+        np.cumsum([len(p[0]) for p in parts], out=offs[1:])
+        lead = len(parts) - len(self._uniq)  # 1 when known keys head the parts
+        g = np.concatenate(
+            [codes[offs[lead + i] : offs[lead + i + 1]][bl] for i, bl in enumerate(self._codes)]
+        )
+        n = len(self.keys[0])
+        if n > self.n_rows.size:
+            self.n_rows = np.concatenate(
+                [self.n_rows, np.zeros(n - self.n_rows.size, dtype=np.int64)]
+            )
+        if self._weights[0] is None:
+            self.n_rows += np.bincount(g, minlength=n)
+        else:
+            # np.add.at keeps the row counts exact int64 (bincount weights
+            # would round past 2^53 — a stated design case for hot keys)
+            np.add.at(self.n_rows, g, np.concatenate(self._weights))
+        self._uniq, self._codes, self._weights, self.pending = [], [], [], 0
+        return g
+
+
+def _arrow_state_batches(names: list[str], keys: list, n_rows: np.ndarray, bufs: list):
+    """Yield the output RecordBatches of an Arrow builder: the ``keys``
+    arrays, ``n_rows`` and one BinaryArray per state column, wrapped
+    zero-copy around its flat ``(buf, offs)`` pair (``bufs``, in ``names``
+    order) — no per-group Python bytes objects. Each chunk keeps every
+    state column under ``_EMIT_BYTES`` (BinaryArray offsets are int32)."""
+    import pyarrow as pa
+
+    n = len(keys[0])
+    start = 0
+    while start < n:
+        stop = n
+        for _, offs in bufs:
+            stop = min(stop, int(np.searchsorted(offs, offs[start] + _EMIT_BYTES)) - 1)
+        stop = max(stop, start + 1)
+        arrays = [k.slice(start, stop - start) for k in keys]
+        arrays.append(pa.array(n_rows[start:stop], type=pa.int64()))
+        for name, (buf, offs) in zip(names[len(keys) + 1 :], bufs):
+            # a single blob over _EMIT_BYTES still makes a one-row
+            # chunk: fail loudly rather than wrap the int32 offsets
+            if offs[stop] - offs[start] >= _OFFSET_LIMIT:
+                raise OverflowError(
+                    f"{name}: {int(offs[stop] - offs[start])} state bytes in "
+                    f"one emit chunk exceed the BinaryArray int32 offset range"
+                )
+            rel = (offs[start : stop + 1] - offs[start]).astype(np.int32)
+            chunk = buf[offs[start] : offs[stop]]
+            arrays.append(
+                pa.Array.from_buffers(
+                    pa.binary(),
+                    stop - start,
+                    [None, pa.py_buffer(rel), pa.py_buffer(np.ascontiguousarray(chunk))],
+                )
+            )
+        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        start = stop
+
+
 def _vec_direct_builder_arrow(
     specs: list[SketchSpec], group_cols: list[str], col_map: dict, kernel
 ):
@@ -476,115 +575,54 @@ def _vec_direct_builder_arrow(
 
     Group keys stay Arrow-native end to end, for any number of key
     columns: input batches never convert to pandas (2.4M string->PyObject
-    conversions per bench partition), and each batch only encodes its own
-    keys (``_encode_keys``, C++) and stashes (uniques, codes, payloads).
-    Group codes are assigned in DEFERRED blocks of ``_FOLD_ROWS`` rows: a
-    consolidation re-encodes the known keys followed by every stashed
-    batch's uniques (known keys lead, so existing codes keep their
-    values) and folds the payloads into the kernel accumulator with one
-    sort. Re-encoding per batch instead rebuilt the key hash table every
-    64k rows — O(live groups) per batch, the dominant cost of the
-    20M-group bench build. Memory holds ~16 bytes per pending row.
+    conversions per bench partition). Each batch stashes its keys in a
+    ``_KeyFold`` and its per-row kernel payloads; every ``_FOLD_ROWS``
+    rows one consolidation assigns the group codes and folds the payloads
+    into the kernel accumulator with one sort. Memory holds ~16 bytes per
+    pending row.
 
-    Output rows follow first-seen key order, a null key included. The
-    output RecordBatch is assembled zero-copy: the group columns ARE the
-    final uniques, and each state column wraps the kernel's ``emit_buf``
-    flat (buf, offs) pair into a BinaryArray — no per-group Python bytes
-    objects on either side. Float keys reach this builder canonical
+    Output rows follow first-seen key order, a null key included, and
+    are assembled zero-copy (``_arrow_state_batches``): the group columns
+    ARE the final uniques. Float keys reach this builder canonical
     (``_prepare``), since Arrow encodes NaN and -0.0 bitwise."""
 
     def fn(batches):
-        import pyarrow as pa
-
-        keys = None  # per group column: the unique values in code order
-        n_rows = np.empty(0, dtype=np.int64)
+        fold = _KeyFold()
         accs = {s.name: kernel.init_acc() for s in specs}
-        pend_uniq: list = []
-        pend_codes: list = []
-        pend_pay: dict[str, list] = {s.name: [] for s in specs}
-        pend_n = 0
+        pend = {s.name: [] for s in specs}
 
-        def consolidate():
-            nonlocal keys, n_rows, pend_uniq, pend_codes, pend_n
-            if not pend_uniq:
+        def absorb():
+            g = fold.codes()
+            if not g.size:
                 return
-            parts = ([] if keys is None else [keys]) + pend_uniq
-            codes, keys = _encode_keys(
-                [pa.concat_arrays([p[i] for p in parts]) for i in range(len(group_cols))]
-            )
-            offs = np.zeros(len(parts) + 1, dtype=np.int64)
-            np.cumsum([len(p[0]) for p in parts], out=offs[1:])
-            lead = len(parts) - len(pend_uniq)  # 1 when known keys head the parts
-            g_all = np.concatenate(
-                [
-                    codes[offs[lead + i] : offs[lead + i + 1]][bl]
-                    for i, bl in enumerate(pend_codes)
-                ]
-            )
-            if len(keys[0]) > n_rows.size:
-                n_rows = np.concatenate(
-                    [n_rows, np.zeros(len(keys[0]) - n_rows.size, dtype=np.int64)]
-                )
-            n_rows += np.bincount(g_all, minlength=n_rows.size)
             for s in specs:
                 accs[s.name] = kernel.absorb_payloads(
-                    accs[s.name], s, g_all, np.concatenate(pend_pay[s.name])
+                    accs[s.name], s, g, np.concatenate(pend[s.name])
                 )
-                pend_pay[s.name].clear()
-            pend_uniq, pend_codes, pend_n = [], [], 0
+                pend[s.name].clear()
 
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            bl_codes, bl_uniq = _encode_keys([rb.column(c) for c in group_cols])
-            pend_uniq.append(bl_uniq)
-            pend_codes.append(bl_codes)
+            fold.add([rb.column(c) for c in group_cols])
             for s in specs:
                 harr = rb.column(col_map[s.name]["h"])
                 if harr.null_count:
                     harr = harr.fill_null(0)
                 h = harr.to_numpy(zero_copy_only=False).view(np.uint64)
-                pend_pay[s.name].append(kernel.row_payloads(s, h))
-            pend_n += rb.num_rows
-            if pend_n >= _FOLD_ROWS:
-                consolidate()
-        consolidate()
-        if keys is None:
+                pend[s.name].append(kernel.row_payloads(s, h))
+            if fold.pending >= _FOLD_ROWS:
+                absorb()
+        absorb()
+        if fold.keys is None:
             return
-        n = len(keys[0])
-        bufs = {s.name: kernel.emit_buf(accs[s.name], s, n) for s in specs}
-        names = list(group_cols) + [_NROWS_COL] + [s.state_col for s in specs]
-        start = 0
-        while start < n:
-            stop = n
-            for s in specs:  # keep each chunk's state bytes under int32 offsets
-                offs = bufs[s.name][1]
-                stop = min(
-                    stop, int(np.searchsorted(offs, offs[start] + _EMIT_BYTES)) - 1
-                )
-            stop = max(stop, start + 1)
-            arrays = [k.slice(start, stop - start) for k in keys]
-            arrays.append(pa.array(n_rows[start:stop], type=pa.int64()))
-            for s in specs:
-                buf, offs = bufs[s.name]
-                # a single blob over _EMIT_BYTES still makes a one-row
-                # chunk: fail loudly rather than wrap the int32 offsets
-                if offs[stop] - offs[start] >= _OFFSET_LIMIT:
-                    raise OverflowError(
-                        f"{s.state_col}: {int(offs[stop] - offs[start])} state bytes in "
-                        f"one emit chunk exceed the BinaryArray int32 offset range"
-                    )
-                rel = (offs[start : stop + 1] - offs[start]).astype(np.int32)
-                chunk = buf[offs[start] : offs[stop]]
-                arrays.append(
-                    pa.Array.from_buffers(
-                        pa.binary(),
-                        stop - start,
-                        [None, pa.py_buffer(rel), pa.py_buffer(np.ascontiguousarray(chunk))],
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-            start = stop
+        n = len(fold.keys[0])
+        yield from _arrow_state_batches(
+            list(group_cols) + [_NROWS_COL] + [s.state_col for s in specs],
+            fold.keys,
+            fold.n_rows,
+            [kernel.emit_buf(accs[s.name], s, n) for s in specs],
+        )
 
     return fn
 
@@ -825,7 +863,7 @@ def grouped_sketch(
       state blob per INPUT row — measured 69s vs 31s at 20M groups.
     * ``True`` (``pre_partial``): map-side partial states, one state
       shuffle, and the merge stage of ``rollup_states``
-      (``rollup.merge_state_rows``). Right when
+      (``rollup.merge_state_rows``, without its sort). Right when
       scan partitions repeat their keys, so partials shrink the
       exchange. It is also the skew guard: a hot key then costs one
       partial state per scan partition instead of piling all its rows
@@ -873,7 +911,9 @@ def grouped_sketch(
             _vec_partial_builder(specs, group_cols, col_map, max_states_per_partition, kernel),
             schema=_grouped_schema(prepared, group_cols, specs, with_ord=True),
         )
-        return merge_state_rows(partials, group_cols, [s.state_col for s in specs])
+        return merge_state_rows(
+            partials, group_cols, [s.state_col for s in specs], ordered=False
+        )
     partials = _pre_merge_states(df, group_cols, specs, salt_buckets, max_states_per_partition)
     out_schema = StructType(
         [f for f in partials.schema.fields if f.name != _ORD_COL]

@@ -416,12 +416,20 @@ def packed_entries_many_from_bytes(blobs) -> tuple[np.ndarray, np.ndarray]:
     both wire ends and carry p in the spec (same contract as the scalar
     absorb loop this replaces)."""
     n = len(blobs)
+    offs = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.fromiter((len(b) for b in blobs), count=n, dtype=np.int64), out=offs[1:])
+    return packed_entries_many_from_buf(np.frombuffer(b"".join(blobs), dtype=np.uint8), offs)
+
+
+def packed_entries_many_from_buf(flat: np.ndarray, offs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``packed_entries_many_from_bytes`` over blobs laid end to end in
+    ``flat`` (uint8), blob i at ``flat[offs[i]:offs[i + 1]]`` — the layout
+    of an Arrow BinaryArray, so a merge reads its input column without
+    one Python bytes object per state row."""
+    n = len(offs) - 1
     if n == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint32)
-    lens = np.fromiter((len(b) for b in blobs), count=n, dtype=np.int64)
-    flat = np.frombuffer(b"".join(blobs), dtype=np.uint8)
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
+    lens = np.diff(offs)
     starts = offs[:-1]
     head = np.frombuffer(_PREFIX_V2, dtype=np.uint8)
     is_v2 = (lens >= 9) & ((lens - 9) % 4 == 0)
@@ -433,7 +441,7 @@ def packed_entries_many_from_bytes(blobs) -> tuple[np.ndarray, np.ndarray]:
     other = np.flatnonzero(~is_v2)
     dec = {}
     for i in other.tolist():
-        dec[i] = packed_entries_from_bytes(blobs[i])[1]
+        dec[i] = packed_entries_from_bytes(flat[offs[i] : offs[i + 1]].tobytes())[1]
         counts[i] = dec[i].size
     out_b = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(counts, out=out_b[1:])

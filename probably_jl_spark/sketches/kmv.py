@@ -119,12 +119,19 @@ def mins_many_from_bytes(blobs) -> tuple[np.ndarray, np.ndarray]:
     scalar decoder and splice in order. k is NOT returned (callers own
     both wire ends; same contract as the scalar absorb loop)."""
     n = len(blobs)
+    offs = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.fromiter((len(b) for b in blobs), count=n, dtype=np.int64), out=offs[1:])
+    return mins_many_from_buf(np.frombuffer(b"".join(blobs), dtype=np.uint8), offs)
+
+
+def mins_many_from_buf(flat: np.ndarray, offs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``mins_many_from_bytes`` over blobs laid end to end in ``flat``
+    (uint8), blob i at ``flat[offs[i]:offs[i + 1]]`` — the layout of an
+    Arrow BinaryArray."""
+    n = len(offs) - 1
     if n == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint64)
-    lens = np.fromiter((len(b) for b in blobs), count=n, dtype=np.int64)
-    flat = np.frombuffer(b"".join(blobs), dtype=np.uint8)
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
+    lens = np.diff(offs)
     starts = offs[:-1]
     head = np.frombuffer(_PREFIX, dtype=np.uint8)
     ok = lens >= 16
@@ -142,7 +149,7 @@ def mins_many_from_bytes(blobs) -> tuple[np.ndarray, np.ndarray]:
     counts[~ok] = 0
     dec = {}
     for i in np.flatnonzero(~ok).tolist():
-        dec[i] = mins_from_bytes(blobs[i])[1]
+        dec[i] = mins_from_bytes(flat[offs[i] : offs[i + 1]].tobytes())[1]
         counts[i] = dec[i].size
     out_b = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(counts, out=out_b[1:])

@@ -1006,10 +1006,13 @@ def test_grouped_arrow_emit_chunks_byte_identical(spark, monkeypatch):
     reach the int32 offset range must fail loudly, not wrap. Covered for a
     one-column and a two-column key, both with nulls, whose groups come
     out in first-seen order, the null key included, whether codes are
-    assigned once or per batch."""
+    assigned once or per batch. The merge stage shares the deferred fold
+    and the emit: merging per-batch partial states gives the same
+    batches."""
     import pyarrow as pa
 
     from probably_jl_spark.operators import grouped as G
+    from probably_jl_spark.operators import rollup as R
 
     rs = np.random.default_rng(7)
     batches, pair_batches = [], []
@@ -1050,6 +1053,19 @@ def test_grouped_arrow_emit_chunks_byte_identical(spark, monkeypatch):
             # a consolidation per batch: known keys lead each re-encode
             monkeypatch.setattr(G, "_FOLD_ROWS", 1)
             assert pa.Table.from_batches(_arrow_build(specs, inp, group_cols)).to_pydict() == want
+            monkeypatch.undo()
+            # the merge stage folds one partial per (batch, group) into the
+            # same final states, whether it consolidates once or per batch
+            partials = [
+                pb.append_column("__ord", pa.array([i] * pb.num_rows, pa.int64()))
+                for i, b in enumerate(inp)
+                for pb in _arrow_build(specs, [b], group_cols)
+            ]
+            state_cols = [s.state_col for s in specs]
+            for fold_rows in (R._FOLD_ROWS, 1):
+                monkeypatch.setattr(R, "_FOLD_ROWS", fold_rows)
+                merged = list(R._merge_builder(group_cols, state_cols)(iter(partials)))
+                assert pa.Table.from_batches(merged).to_pydict() == want
             monkeypatch.undo()
             for cap in (4096, 16):  # several groups per chunk; one row per chunk
                 monkeypatch.setattr(G, "_EMIT_BYTES", cap)
